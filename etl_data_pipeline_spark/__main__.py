@@ -29,6 +29,16 @@ from etl_data_pipeline_spark.spec import PipelineSpec, TableSpec, read_table_reg
 from etl_data_pipeline_spark.watermark import WatermarkStore
 
 
+def _connection_options(db: dict) -> dict:
+    """One connection-registry entry (config.db_details) as source or
+    sink options: JDBC credentials, a libpq conninfo, or a directory."""
+    if db["DB_TYPE"] == "jdbc":
+        return {"url": db["JDBC_URL"], "user": db["USER"], "password": db["PASSWORD"]}
+    if db["DB_TYPE"] == "pglive":
+        return {"conninfo": db["CONNINFO"]}
+    return {"dir": db["PATH"]}
+
+
 def build_spec(env: str, table_list: str, tables_list_path: str) -> PipelineSpec:
     """Registry CSV + env config -> runnable PipelineSpec."""
     cfg = db_details(env)
@@ -41,23 +51,9 @@ def build_spec(env: str, table_list: str, tables_list_path: str) -> PipelineSpec
                 watermark_column=s.watermark_column,
                 watermark_type=s.watermark_type,
                 source_format=src["DB_TYPE"],
-                source_options=(
-                    {"url": src["JDBC_URL"], "user": src["USER"],
-                     "password": src["PASSWORD"]}
-                    if src["DB_TYPE"] == "jdbc"
-                    else {"conninfo": src["CONNINFO"]}
-                    if src["DB_TYPE"] == "pglive"
-                    else {"dir": src["PATH"]}
-                ),
+                source_options=_connection_options(src),
                 sink_format=tgt["DB_TYPE"],
-                sink_options=(
-                    {"url": tgt["JDBC_URL"], "user": tgt["USER"],
-                     "password": tgt["PASSWORD"]}
-                    if tgt["DB_TYPE"] == "jdbc"
-                    else {"conninfo": tgt["CONNINFO"]}
-                    if tgt["DB_TYPE"] == "pglive"
-                    else {"dir": tgt["PATH"]}
-                ),
+                sink_options=_connection_options(tgt),
                 # replay idempotency (merge on the watermark key) is a
                 # parquet/manifest capability; DB sinks (jdbc/pglive)
                 # are plain appends — the reference's own semantics

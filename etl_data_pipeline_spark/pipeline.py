@@ -11,6 +11,20 @@ layers at once:
   submitting per-table DataFrame jobs into one FAIR-scheduled
   SparkSession.
 
+``IncrementalPipeline.run_table`` is ONE cycle for every table. Only
+the batch read depends on the watermark kind:
+
+- a data-column watermark (``_read_column_batch``): read -> validate ->
+  strict ``>`` filter -> ``limit(1)`` empty gate -> localCheckpoint ->
+  batch max;
+- a manifest-version watermark (``_read_version_feed``): pin the
+  source head, read the change feed since the recorded version (with
+  resync/guard degrade paths), and advance even over an empty range.
+
+Both hand ``(batch, batch_key, new_watermark, feed_version_column)`` to
+the shared tail: expectations gate -> newest-row-per-key compaction of
+a version feed -> one sink dispatch -> watermark advance.
+
 Semantics preserved exactly (SURVEY.md §2.C):
 1. strict ``>`` watermark filter;
 2. degrade-to-full-load on bad/unknown watermark state;
@@ -32,12 +46,14 @@ from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
-from etl_data_pipeline_spark.schema import validate_schema
+from etl_data_pipeline_spark.schema import contains_map, validate_schema
 from etl_data_pipeline_spark.sinks import (
     _target_path,
     idempotent_append_parquet,
+    sink_target_path,
     write_sink,
 )
 from etl_data_pipeline_spark.sources import jdbc_incremental_dbtable, read_source
@@ -91,6 +107,26 @@ def incremental_source_options(t: TableSpec, raw_watermark: str | None) -> dict:
     return opts
 
 
+def _latest_per_key(df: DataFrame, keys, order_col: str) -> DataFrame:
+    """The newest row per ``keys`` by ``order_col``: one window over
+    the batch, never the sink table. Ties (same key, same order value)
+    break on the remaining columns, descending, so a replay after a
+    mid-write crash commits the same winner. Spark cannot ORDER BY a
+    map, so map-bearing columns sort by their JSON rendering, which is
+    deterministic for the same row."""
+    tiebreak = [
+        (F.to_json(f.name) if contains_map(f.dataType) else F.col(f.name)).desc()
+        for f in df.schema.fields
+        if f.name != order_col and f.name not in keys
+    ]
+    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc(), *tiebreak)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 @dataclass
 class TableRunResult:
     table: str
@@ -101,6 +137,12 @@ class TableRunResult:
     # 'retryable' | 'fatal' when the failure carried a JDBC SQLSTATE /
     # vendor code (sources.jdbc_error_class); None for non-JDBC errors
     error_class: str | None = None
+
+
+# What a batch reader hands the shared tail: the batch, its quarantine
+# key, the watermark to record after the load, and the feed-version
+# column to compact by (version feeds with merge keys only).
+_Batch = tuple[DataFrame, Any, Any, str | None]
 
 
 class IncrementalPipeline:
@@ -126,10 +168,47 @@ class IncrementalPipeline:
     # -- single table -------------------------------------------------
 
     def run_table(self, t: TableSpec) -> TableRunResult:
+        """One table's read -> gate -> load -> watermark-advance cycle
+        (app.py:96-172). The reader returns a finished result when
+        there is nothing to load, else the batch for the shared tail."""
         self._validate_sink_config(t)
         if t.source_format == "manifest" and t.watermark_type == "version":
-            return self._run_table_version_feed(t)
-        return self._run_table_column_watermark(t)
+            batch = self._read_version_feed(t)
+        else:
+            batch = self._read_column_batch(t)
+        if isinstance(batch, TableRunResult):
+            return batch
+        df, batch_key, new_wm, ver_col = batch
+        if t.expectations:
+            df = self._apply_expectations(t, df, batch_key)
+            if df is None:  # drop mode, zero clean rows
+                if new_wm is not None:
+                    self.store.set(t.name, new_wm)
+                return TableRunResult(t.name, "loaded", rows=0, new_watermark=new_wm)
+        if ver_col:
+            # last-write-wins by SOURCE COMMIT VERSION, then the engine
+            # column goes before any sink sees the batch
+            df = _latest_per_key(df, t.merge_keys, ver_col).drop(ver_col)
+        # sink config already validated above (pure config, checked
+        # before any data work): upsert implies manifest + merge_keys
+        if t.sink_options.get("mode") == "upsert":
+            self._merge_upsert_sink(t, df)
+        elif t.merge_keys and t.sink_format == "manifest":
+            # manifest's own content fence: anti-join inside the
+            # lease-held commit, no duplicate rows on replay and no
+            # wasted version when the whole batch already landed
+            write_sink(
+                df, "manifest", t.name, {**t.sink_options, "merge_keys": t.merge_keys}
+            )
+        elif t.merge_keys:
+            idempotent_append_parquet(
+                self.spark, df, t.name, dict(t.sink_options), t.merge_keys
+            )
+        else:
+            write_sink(df, t.sink_format, t.name, dict(t.sink_options))
+        if new_wm is not None:
+            self.store.set(t.name, new_wm)  # only after successful load
+        return TableRunResult(t.name, "loaded", new_watermark=new_wm)
 
     @staticmethod
     def _validate_sink_config(t: TableSpec) -> None:
@@ -167,12 +246,12 @@ class IncrementalPipeline:
                 f"drop merge_keys"
             )
 
-    def _run_table_version_feed(self, t: TableSpec) -> TableRunResult:
-        """Version-keyed incremental copy from a manifest-table source:
-        the watermark is the source's MANIFEST VERSION, not a data
-        column — no watermark column needed, no strict-> scan of the
-        table, and the read is O(delta) (manifest.read_changes unions
-        only the directories committed since the recorded version).
+    def _read_version_feed(self, t: TableSpec) -> _Batch | TableRunResult:
+        """Version-keyed batch from a manifest-table source: the
+        watermark is the source's MANIFEST VERSION, not a data column —
+        no watermark column needed, no strict-> scan of the table, and
+        the read is O(delta) (manifest.read_changes unions only the
+        directories committed since the recorded version).
 
         Ordering of the three reads is load-bearing: the head version
         is captured FIRST and both the feed and the recorded progress
@@ -195,23 +274,21 @@ class IncrementalPipeline:
             VacuumedError,
             read_changes,
             read_manifest,
+            read_table,
         )
 
-        opts = dict(t.source_options)
-        src_path = _target_path(t.name, opts)
+        src_path = _target_path(t.name, t.source_options)
         raw = self.store.get(t.name)
         if raw is None:
             # EITHER the genuine first run (sink absent — the guard
             # passes and the replay builds it) OR a lost/corrupted
             # watermark store against a populated sink, where a
             # full-feed plain append would duplicate every row: the
-            # same guard every other replaying degrade path takes
-            # (previously this path alone skipped it — r9 review).
+            # same guard every other replaying degrade path takes.
             self._guard_resync_duplication(t, "missing version watermark")
         try:
             # a NEGATIVE recorded version is corruption, not progress:
-            # treat like any unparseable value (the old max(0, ...)
-            # silently clamped it into an unguarded full feed)
+            # treat like any unparseable value
             since = int(raw) if raw is not None else 0
             if since < 0:
                 raise ValueError(f"negative version watermark {raw!r}")
@@ -247,17 +324,7 @@ class IncrementalPipeline:
             )
             self._guard_resync_duplication(t, "source-rebuild resync")
             since = 0
-        if (
-            since > 0
-            and t.name not in self.authoritative_watermarks
-            and self._sink_reset_since_watermark(t)
-        ):
-            log.warning(
-                "table %s: version watermark %r recorded but sink target is"
-                " missing — degrading to full feed to rebuild it",
-                t.name,
-                raw,
-            )
+        if since > 0 and self._sink_wiped_under_watermark(t, raw):
             since = 0
         if since >= head:
             log.info("table %s: no new versions, skipping load", t.name)
@@ -268,7 +335,7 @@ class IncrementalPipeline:
         # commit version orders them (a data watermark column, if any,
         # orders by business time — which can keep a stale row when a
         # correction re-emits a key with an older timestamp). The
-        # column is compacted away again before any sink write.
+        # shared tail compacts the column away before any sink write.
         ver_col = "_feed_version" if t.merge_keys else None
         try:
             df = read_changes(
@@ -287,9 +354,7 @@ class IncrementalPipeline:
             # (idempotent under merge keys). Anything else propagates.
             # TYPED classes, not message sniffing: a table path that
             # happens to contain 'overwrite' must not route an
-            # unrelated error into a full-snapshot resync (r9 review).
-            from etl_data_pipeline_spark.sinks.manifest import read_table
-
+            # unrelated error into a full-snapshot resync.
             log.warning(
                 "table %s: %s — resyncing from the full snapshot", t.name, e
             )
@@ -299,8 +364,6 @@ class IncrementalPipeline:
                 # one snapshot = one version; per-key ordering inside
                 # it is unknowable, so same-key duplicates (if the
                 # overwritten source kept any) still fail merge loudly
-                from pyspark.sql import functions as F
-
                 df = df.withColumn(ver_col, F.lit(head).cast("long"))
         if t.expected_schema:
             # validate_schema PROJECTS to the declared columns — keep
@@ -316,43 +379,9 @@ class IncrementalPipeline:
             return TableRunResult(
                 t.name, "skipped_empty", rows=0, new_watermark=head
             )
-        if t.expectations:
-            # same gate as the column path (this path previously
-            # skipped it entirely — the configured quality contract
-            # silently unenforced for version-feed tables, r9 review).
-            # Batch key = the frozen SINCE version: stable across
-            # replays of the same delta, so quarantine overwrites the
-            # same batch=* subdir.
-            df = self._apply_expectations(t, df, since)
-            if df is None:  # drop mode, zero clean rows
-                self.store.set(t.name, head)
-                return TableRunResult(
-                    t.name, "loaded", rows=0, new_watermark=head
-                )
-        if ver_col:
-            df = self._compact_feed_versions(t, df, ver_col)
-        if (
-            t.merge_keys
-            and t.sink_format == "manifest"
-            and t.sink_options.get("mode") == "upsert"
-        ):
-            # CDC feed: later versions REPLACE same-key rows — the
-            # content-fence append would anti-join the changed rows
-            # away and keep stale values forever (this path previously
-            # ignored mode='upsert' silently, r9 review)
-            self._merge_upsert_sink(t, df)
-        elif t.merge_keys and t.sink_format == "manifest":
-            write_sink(
-                df, "manifest", t.name, {**t.sink_options, "merge_keys": t.merge_keys}
-            )
-        elif t.merge_keys:
-            idempotent_append_parquet(
-                self.spark, df, t.name, dict(t.sink_options), t.merge_keys
-            )
-        else:
-            write_sink(df, t.sink_format, t.name, dict(t.sink_options))
-        self.store.set(t.name, head)  # only after successful load
-        return TableRunResult(t.name, "loaded", new_watermark=head)
+        # Batch key = the frozen SINCE version: stable across replays
+        # of the same delta, so quarantine overwrites the same subdir.
+        return df, since, head, ver_col
 
     def _guard_resync_duplication(self, t: TableSpec, reason: str) -> None:
         """Every version-feed degrade path that REPLAYS rows (full
@@ -372,9 +401,9 @@ class IncrementalPipeline:
             f"to let the replay rebuild it."
         )
 
-    def _run_table_column_watermark(self, t: TableSpec) -> TableRunResult:
-        """One table's read -> gate -> load -> watermark-advance cycle
-        (app.py:96-172).
+    def _read_column_batch(self, t: TableSpec) -> _Batch | TableRunResult:
+        """Data-column-watermark batch: read -> validate -> strict-`>`
+        filter -> empty gate -> snapshot -> batch max.
 
         The cycle runs three actions over the batch: a cheap empty
         gate on the live source, then watermark max + sink write over
@@ -397,24 +426,7 @@ class IncrementalPipeline:
         """
         raw = self.store.get(t.name)
         wm_value = parse_watermark(raw, t.watermark_type) if t.is_incremental else None
-        if (
-            wm_value is not None
-            and t.name not in self.authoritative_watermarks
-            and self._sink_reset_since_watermark(t)
-        ):
-            # A recorded watermark with a MISSING sink target means the
-            # sink was wiped after progress was recorded (target rebuild,
-            # botched cleanup). Honoring the watermark would "load" only
-            # the delta into an empty sink and exit 0 with most of the
-            # table silently absent — the one failure mode worse than
-            # recomputing. Degrade to FULL LOAD, the same safe-side
-            # answer every other bad-state path takes (§2.C #2).
-            log.warning(
-                "table %s: watermark %r recorded but sink target is missing"
-                " — degrading to full load to rebuild it",
-                t.name,
-                raw,
-            )
+        if wm_value is not None and self._sink_wiped_under_watermark(t, raw):
             raw, wm_value = None, None
         df = read_source(
             self.spark, t.source_format, t.name, incremental_source_options(t, raw)
@@ -438,64 +450,42 @@ class IncrementalPipeline:
         # lineage — every action below reads these blocks, never the
         # live source. (Blocks are freed when the RDD is GC'd.)
         df = df.localCheckpoint()
-        try:
-            # Compute the batch max BEFORE the write so a mid-write
-            # failure leaves the watermark untouched (app.py:157->168).
-            # Also before the expectations gate: in drop mode the
-            # watermark covers the WHOLE batch (quarantined rows
-            # included), so a fixed row re-arrives with a NEW watermark
-            # instead of replaying forever.
-            new_wm = (
-                max_watermark(df, t.watermark_column) if t.is_incremental else None
-            )
+        # Compute the batch max BEFORE the write so a mid-write
+        # failure leaves the watermark untouched (app.py:157->168).
+        # Also before the expectations gate: in drop mode the
+        # watermark covers the WHOLE batch (quarantined rows
+        # included), so a fixed row re-arrives with a NEW watermark
+        # instead of replaying forever.
+        new_wm = max_watermark(df, t.watermark_column) if t.is_incremental else None
+        # Batch key = the FROZEN stored watermark (raw), not new_wm:
+        # the upper bound changes when rows arrive between a failed
+        # write and its replay, which would scatter the same batch's
+        # violations across two batch=* subdirs. The lower bound is
+        # stable until the batch commits, so replays overwrite the
+        # same subdir.
+        return df, raw, new_wm, None
 
-            if t.expectations:
-                # Batch key = the FROZEN stored watermark (raw), not
-                # new_wm: the upper bound changes when rows arrive
-                # between a failed write and its replay, which would
-                # scatter the same batch's violations across two
-                # batch=* subdirs. The lower bound is stable until the
-                # batch commits, so replays overwrite the same subdir.
-                df = self._apply_expectations(t, df, raw)
-                if df is None:  # drop mode, zero clean rows
-                    if t.is_incremental and new_wm is not None:
-                        self.store.set(t.name, new_wm)
-                    return TableRunResult(
-                        t.name, "loaded", rows=0, new_watermark=new_wm
-                    )
-
-            # sink config already validated in run_table (pure config,
-            # checked before any data work)
-            if (
-                t.merge_keys
-                and t.sink_format == "manifest"
-                and t.sink_options.get("mode") == "upsert"
-            ):
-                self._merge_upsert_sink(t, df)
-            elif t.merge_keys and t.sink_format == "manifest":
-                # manifest's own content fence: anti-join inside the
-                # lease-held commit, no duplicate rows on replay and no
-                # wasted version when the whole batch already landed
-                write_sink(
-                    df,
-                    "manifest",
-                    t.name,
-                    {**t.sink_options, "merge_keys": t.merge_keys},
-                )
-            elif t.merge_keys:
-                idempotent_append_parquet(
-                    self.spark, df, t.name, dict(t.sink_options), t.merge_keys
-                )
-            else:
-                write_sink(df, t.sink_format, t.name, dict(t.sink_options))
-
-            if t.is_incremental and new_wm is not None:
-                self.store.set(t.name, new_wm)  # only after successful load
-            return TableRunResult(t.name, "loaded", new_watermark=new_wm)
-        finally:
-            # Checkpoint blocks have no explicit release API; dropping
-            # the reference lets the ContextCleaner reclaim them.
-            del df
+    def _sink_wiped_under_watermark(self, t: TableSpec, raw) -> bool:
+        """A recorded watermark with a MISSING sink target means the
+        sink was wiped after progress was recorded (target rebuild,
+        botched cleanup). Honoring the watermark would "load" only the
+        delta into an empty sink and exit 0 with most of the table
+        silently absent — the one failure mode worse than recomputing.
+        True tells the reader to degrade to a FULL load, the same
+        safe-side answer every other bad-state path takes (§2.C #2).
+        An explicitly seeded watermark (``authoritative_watermarks``)
+        is the operator's assertion and is always honoured."""
+        if t.name in self.authoritative_watermarks or not (
+            self._sink_reset_since_watermark(t)
+        ):
+            return False
+        log.warning(
+            "table %s: watermark %r recorded but sink target is missing"
+            " — degrading to a full load to rebuild it",
+            t.name,
+            raw,
+        )
+        return True
 
     def _apply_expectations(self, t: TableSpec, df, batch_wm=None):
         """Run the declarative quality gate (expectations.py) on the
@@ -555,57 +545,6 @@ class IncrementalPipeline:
         # advances the watermark over the whole batch
         return None if report.total == report.n_violations else report.passed
 
-    @staticmethod
-    def _tiebreak_expr(dtype, col):
-        """Deterministic-merge tiebreak expression for one column.
-        Spark cannot ORDER BY MapType (AnalysisException), so columns
-        whose type contains a map sort by their JSON rendering instead
-        — the same row always serializes the same way, so a replay
-        still picks the same winner. Orderable types sort natively."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import ArrayType, MapType, StructType
-
-        def orderable(dt):
-            if isinstance(dt, MapType):
-                return False
-            if isinstance(dt, ArrayType):
-                return orderable(dt.elementType)
-            if isinstance(dt, StructType):
-                return all(orderable(f.dataType) for f in dt.fields)
-            return True
-
-        return col if orderable(dtype) else F.to_json(col)
-
-    def _compact_feed_versions(self, t: TableSpec, df, ver_col: str):
-        """Last-write-wins compaction of a version feed's delta by the
-        SOURCE COMMIT VERSION: a key updated in >=2 source versions
-        since the watermark arrives as >=2 delta rows, and only the
-        feed version orders them — a data watermark column orders by
-        business time, which keeps a stale row when a correction
-        re-emits a key with an older timestamp. Ties (same key updated
-        twice in ONE commit, or an overwrite-resync snapshot where
-        every row carries the head version) break on the remaining
-        columns deterministically, so a replay after a mid-write crash
-        commits the same winner. The engine column is dropped before
-        any sink sees the batch. One window over the delta only —
-        O(batch log batch), never touches the sink table."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        tiebreak = [
-            self._tiebreak_expr(df.schema[c].dataType, F.col(c)).desc()
-            for c in df.columns
-            if c != ver_col and c not in t.merge_keys
-        ]
-        w = Window.partitionBy(*t.merge_keys).orderBy(
-            F.col(ver_col).desc(), *tiebreak
-        )
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", ver_col)
-        )
-
     def _merge_upsert_sink(self, t: TableSpec, df) -> None:
         """CDC upsert sink: ``sink_options={'mode': 'upsert'}`` on a
         manifest table with merge_keys routes the batch through
@@ -618,20 +557,15 @@ class IncrementalPipeline:
         A CDC batch can carry several changes for one key; merge
         requires unique keys, so the batch is first compacted to the
         newest change per key BY THE WATERMARK COLUMN (the only
-        ordering the spec declares), with the remaining row columns as
-        a DETERMINISTIC tiebreak — same-watermark changes to one key
-        must pick the same winner on every run, or a replay after a
-        mid-write crash could commit a different table state than the
-        first attempt (breaking merge's replay idempotency). A
-        full-load table has no ordering, so there the batch must
-        already be key-unique or merge fails loudly.
+        ordering the spec declares) with ``_latest_per_key``'s
+        deterministic tiebreak — a replay after a mid-write crash must
+        commit the same table state as the first attempt. A full-load
+        table has no ordering, so there the batch must already be
+        key-unique or merge fails loudly.
 
         ``partition_by`` in sink_options reaches the table's FIRST
         commit (it is a table property thereafter); ``txn`` passes
         through for orchestrators that fence by app/run id."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
         from etl_data_pipeline_spark.sinks.manifest import merge_upsert
 
         opts = t.sink_options
@@ -651,27 +585,13 @@ class IncrementalPipeline:
                 "sinks.manifest.merge_upsert directly with a per-run "
                 "version)"
             )
-        path = _target_path(t.name, opts)
-        batch = df
-        if t.is_incremental and t.watermark_column:
-            tiebreak = [
-                self._tiebreak_expr(batch.schema[c].dataType, F.col(c)).desc()
-                for c in batch.columns
-                if c != t.watermark_column and c not in t.merge_keys
-            ]
-            w = Window.partitionBy(*t.merge_keys).orderBy(
-                F.col(t.watermark_column).desc(), *tiebreak
-            )
-            batch = (
-                batch.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+        if t.watermark_column:
+            df = _latest_per_key(df, t.merge_keys, t.watermark_column)
         partition_by = opts.get("partition_by")
         merge_upsert(
             self.spark,
-            path,
-            batch,
+            _target_path(t.name, opts),
+            df,
             t.merge_keys,
             partition_by=tuple(partition_by) if partition_by else None,
         )
@@ -681,11 +601,11 @@ class IncrementalPipeline:
         table whose watermark says it was loaded. Only decidable for
         path-based sinks; a ``.old`` backup counts as present (the
         staged-swap recovery will restore it on first read). JDBC and
-        custom sinks return False — no cheap existence probe."""
-        if t.sink_format not in ("parquet", "csv", "json", "orc", "manifest"):
+        custom sinks have no target path and return False — no cheap
+        existence probe."""
+        path = sink_target_path(t.sink_format, t.name, t.sink_options)
+        if path is None:
             return False
-        opts = t.sink_options
-        path = _target_path(t.name, opts)
         if t.sink_format == "manifest":
             # A bare path-exists probe is a false negative here: the
             # table dir can exist with no committed version (rm -rf

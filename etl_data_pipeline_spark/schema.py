@@ -19,11 +19,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 
 class SchemaMismatchError(ValueError):
     """Raised when a DataFrame does not match its declared schema."""
+
+
+def contains_map(dt: DataType) -> bool:
+    """True when ``dt`` is, or nests, a MapType. Spark can neither
+    order nor hash a map, so code that sorts or hashes whole rows
+    renders such columns through ``to_json`` (deterministic for the
+    same row) instead."""
+    if isinstance(dt, MapType):
+        return True
+    if isinstance(dt, ArrayType):
+        return contains_map(dt.elementType)
+    if isinstance(dt, StructType):
+        return any(contains_map(f.dataType) for f in dt.fields)
+    return False
 
 
 def _expected(schema: str | StructType) -> StructType:

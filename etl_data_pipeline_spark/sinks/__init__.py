@@ -19,11 +19,13 @@ from __future__ import annotations
 
 import os
 from contextlib import contextmanager
-from typing import Callable, Iterator, Protocol
+from typing import Iterator, Protocol
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
+
+from etl_data_pipeline_spark.schema import contains_map
 
 
 class SinkFn(Protocol):
@@ -184,8 +186,24 @@ def _is_path_not_found(e: AnalysisException) -> bool:
 def _target_path(table: str, options: dict, suffix: str = "") -> str:
     """One definition of the path rule (explicit ``path`` option wins,
     else ``dir/table``); ``suffix`` covers the file-per-table formats
-    (avro/xml) that previously re-implemented this inline."""
+    (avro/xml)."""
     return options.get("path") or os.path.join(options["dir"], table + suffix)
+
+
+# Path-based sink formats -> the suffix their target adds to
+# ``dir/table``. Database sinks (jdbc, pglive) have no path.
+_PATH_SINK_SUFFIX = {
+    "parquet": "", "csv": "", "json": "", "orc": "", "manifest": "",
+    "avro": ".avro", "xml": ".xml",
+}
+
+
+def sink_target_path(fmt: str, table: str, options: dict) -> str | None:
+    """Where a ``fmt`` sink writes ``table``; None for sinks without a
+    filesystem target."""
+    if fmt not in _PATH_SINK_SUFFIX:
+        return None
+    return _target_path(table, options, _PATH_SINK_SUFFIX[fmt])
 
 
 def _parquet_append(df: DataFrame, table: str, options: dict) -> None:
@@ -254,7 +272,7 @@ def _avro_append(df: DataFrame, table: str, options: dict) -> None:
     from etl_data_pipeline_spark.sources import avro_format
 
     avro_format.register(df.sparkSession)
-    path = _target_path(table, options, suffix=".avro")
+    path = sink_target_path("avro", table, options)
     writer = df.write.format(avro_format.FORMAT_NAME).mode("append")
     if "codec" in options:
         writer = writer.option("codec", str(options["codec"]))
@@ -263,7 +281,7 @@ def _avro_append(df: DataFrame, table: str, options: dict) -> None:
 
 def _xml_append(df: DataFrame, table: str, options: dict) -> None:
     """XML append via Spark 4's native xml datasource."""
-    path = _target_path(table, options, suffix=".xml")
+    path = sink_target_path("xml", table, options)
     (
         df.write.format("xml")
         .mode("append")
@@ -353,10 +371,6 @@ SINKS: dict[str, SinkFn] = {
     "xml": _xml_append,
     "pglive": _pglive_append,
 }
-
-
-def register_sink(name: str, fn: SinkFn) -> None:
-    SINKS[name] = fn
 
 
 def write_sink(df: DataFrame, fmt: str, table: str, options: dict) -> None:
@@ -796,22 +810,9 @@ def compact_parquet(
             # the data columns is retry-stable; map-typed columns
             # (unhashable) ride through to_json, which is
             # deterministic for the same row.
-            from pyspark.sql.types import MapType
-
-            def hashable(dt):
-                if isinstance(dt, MapType):
-                    return False
-                et = getattr(dt, "elementType", None)
-                if et is not None and not hashable(et):
-                    return False
-                fields = getattr(dt, "fields", None)
-                if fields is not None:
-                    return all(hashable(f.dataType) for f in fields)
-                return True
-
             salt_cols = [
-                F.col(f.name) if hashable(f.dataType)
-                else F.to_json(F.col(f.name))
+                F.to_json(F.col(f.name)) if contains_map(f.dataType)
+                else F.col(f.name)
                 for f in df.schema.fields
                 if f.name not in parts
             ] or [F.lit(0)]

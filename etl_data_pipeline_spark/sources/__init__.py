@@ -16,7 +16,7 @@ Scale notes baked into each reader:
 from __future__ import annotations
 
 import os
-from typing import Callable, Protocol
+from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -631,10 +631,6 @@ SOURCES: dict[str, SourceFn] = {
     "xml": _xml_source,
     "pglive": _pglive_source,
 }
-
-
-def register_source(name: str, fn: SourceFn) -> None:
-    SOURCES[name] = fn
 
 
 CORRUPT_COL = "_corrupt_record"

@@ -289,15 +289,25 @@ def test_backfill_replaces_only_range(spark, tmp_path):
     assert {r.v for r in got.filter(F.col("day") == 4).collect()} == {"v1"}
 
 
-def test_wiped_sink_with_recorded_watermark_degrades_to_full_load(spark, tmp_path, sf_dir):
+@pytest.mark.parametrize("sink_format", ["parquet", "avro", "xml"])
+def test_wiped_sink_with_recorded_watermark_degrades_to_full_load(
+    spark, tmp_path, sink_format
+):
     """Recorded watermark + missing sink target = inconsistent state
     (someone wiped the target after progress was recorded). Honoring
     the watermark would rebuild the sink from just the delta and exit
-    clean with most rows absent; the run must degrade to a FULL load."""
+    clean with most rows absent; the run must degrade to a FULL load.
+    Covers the file-per-table formats, whose target carries a format
+    suffix (``orders.avro``/``orders.xml``)."""
     from etl_data_pipeline_spark.pipeline import IncrementalPipeline
+    from etl_data_pipeline_spark.sources import read_source
     from etl_data_pipeline_spark.spec import PipelineSpec, TableSpec
     from etl_data_pipeline_spark.watermark import WatermarkStore
 
+    src = str(tmp_path / "src")
+    spark.range(10).select(
+        F.col("id").alias("o_orderkey"), F.lit("x").alias("o_note")
+    ).coalesce(1).write.parquet(os.path.join(src, "orders.parquet"))
     target = str(tmp_path / "target")
     spec = PipelineSpec(
         tables=[
@@ -305,16 +315,23 @@ def test_wiped_sink_with_recorded_watermark_degrades_to_full_load(spark, tmp_pat
                 name="orders",
                 watermark_column="o_orderkey",
                 watermark_type="id",
-                source_options={"dir": sf_dir},
+                source_options={"dir": src},
+                sink_format=sink_format,
                 sink_options={"dir": target},
             )
         ]
     )
     store = WatermarkStore(tmp_path / "wm.json")
     pipe = IncrementalPipeline(spark, spec, store)
+
+    def sink_rows():
+        name = "orders" if sink_format == "parquet" else f"orders.{sink_format}"
+        path = os.path.join(target, name)
+        return read_source(spark, sink_format, "orders", {"path": path}).count()
+
     r1 = pipe.run()[0]
     assert r1.status == "loaded"
-    n_total = spark.read.parquet(os.path.join(target, "orders")).count()
+    assert sink_rows() == 10
 
     # wipe the sink but keep the state — the inconsistency under test
     import shutil
@@ -322,7 +339,7 @@ def test_wiped_sink_with_recorded_watermark_degrades_to_full_load(spark, tmp_pat
     shutil.rmtree(target)
     r2 = pipe.run()[0]
     assert r2.status == "loaded"  # not skipped_empty
-    assert spark.read.parquet(os.path.join(target, "orders")).count() == n_total
+    assert sink_rows() == 10
     # watermark re-recorded after the rebuild
     assert store.get("orders") == str(r1.new_watermark)
 
@@ -872,3 +889,74 @@ def test_version_feed_missing_watermark_guards_populated_sink(spark, tmp_path):
     assert r.status == "failed" and "duplicate" in (r.error or "")
     # sink untouched by the refused replay
     assert spark.read.parquet(str(tmp_path / "sink" / "kv")).count() == 2
+
+
+def _run_table_jobs(spark, pipe, t, group):
+    """Spark jobs one ``run_table`` call submits, counted through its
+    own job group (broadcast/subquery jobs inherit the group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "run_table job budget")
+    try:
+        result = pipe.run_table(t)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "kind, budget",
+    [
+        ("column_fence", (7, 9, 3)),
+        ("version_feed", (4, 7, 0)),
+        ("full_load", (5, 5, 5)),
+    ],
+)
+def test_run_table_job_budget(spark, tmp_path, kind, budget):
+    """Spark jobs per ``run_table`` on a 10-row first load, a 5-row
+    warm load and a no-new-data poll. The cycle's actions are the
+    empty gate, the snapshot checkpoint, the watermark max and the
+    sink write (plus the fence's own reads); a refactor that adds an
+    eager action shows up here as a changed count."""
+    from etl_data_pipeline_spark.sinks.manifest import commit as mcommit
+
+    src_dir = str(tmp_path / "src")
+    rows = lambda lo, n: spark.range(lo, lo + n).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    if kind == "version_feed":
+        t = TableSpec(
+            name="kv",
+            watermark_type="version",
+            source_format="manifest",
+            source_options={"dir": src_dir},
+            sink_options={"dir": str(tmp_path / "sink")},
+            merge_keys=("k",),
+        )
+        add = lambda lo, n, first: mcommit(
+            rows(lo, n), os.path.join(src_dir, "kv"),
+            mode="overwrite" if first else "append",
+        )
+    else:
+        t = TableSpec(
+            name="kv",
+            watermark_column="k" if kind == "column_fence" else None,
+            watermark_type="id" if kind == "column_fence" else None,
+            source_options={"dir": src_dir},
+            sink_options={"dir": str(tmp_path / "sink")},
+            merge_keys=("k",) if kind == "column_fence" else None,
+        )
+        add = lambda lo, n, first: rows(lo, n).coalesce(1).write.mode(
+            "overwrite" if first else "append"
+        ).parquet(os.path.join(src_dir, "kv.parquet"))
+    pipe = IncrementalPipeline(
+        spark, PipelineSpec(tables=[t]), WatermarkStore(tmp_path / "wm.json")
+    )
+    add(0, 10, True)
+    first, n_first = _run_table_jobs(spark, pipe, t, f"budget-{kind}-first")
+    add(10, 5, False)
+    warm, n_warm = _run_table_jobs(spark, pipe, t, f"budget-{kind}-warm")
+    poll, n_poll = _run_table_jobs(spark, pipe, t, f"budget-{kind}-poll")
+    assert first.status == warm.status == "loaded"
+    assert poll.status == ("loaded" if kind == "full_load" else "skipped_empty")
+    assert (n_first, n_warm, n_poll) == budget

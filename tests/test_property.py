@@ -468,7 +468,8 @@ def test_read_changes_version_column_invariant(spark, plan):
     appends AFTER since, each stamped with the manifest version its
     commit created — compactions (layout-only) contribute no rows and
     never disturb the stamps. This is the contract the version-feed
-    CDC compaction (pipeline._compact_feed_versions) rests on."""
+    CDC compaction (pipeline._latest_per_key over the feed version)
+    rests on."""
     import os
     import tempfile
 
