@@ -322,9 +322,25 @@ def _lr_wmap(support: list[int], w: dict[int, float]):
     pure driver-side Python — measured 1.07 s vs 0.013 s for 20
     builds. repr(float) round-trips exactly and the D suffix parses
     as DOUBLE, so the literal map is bit-identical to the F.lit form
-    (asserted before the swap; the oracle replays the same values)."""
-    entries = ", ".join(f"{j}L, {w[j]!r}D" for j in support)
+    (asserted before the swap; the oracle replays the same values).
+    A diverged step's non-finite weights have no such literal (``infD``
+    parses as a column name) and are spelled as the string casts the
+    F.lit form produces."""
+    entries = ", ".join(f"{j}L, {_sql_double(w[j])}" for j in support)
     return F.expr(f"map({entries})")
+
+
+_NON_FINITE_SQL = {
+    "inf": "CAST('Infinity' AS DOUBLE)",
+    "-inf": "CAST('-Infinity' AS DOUBLE)",
+    "nan": "CAST('NaN' AS DOUBLE)",
+}
+
+
+def _sql_double(v: float) -> str:
+    """``v`` as an exact SQL DOUBLE literal."""
+    r = repr(v)
+    return _NON_FINITE_SQL.get(r, f"{r}D")
 
 
 def _lr_train(spark: SparkSession, sf_dir: str):

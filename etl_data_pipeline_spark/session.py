@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_data_pipeline_spark.schema import parquet_schema, read_parquet
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -113,8 +115,12 @@ def get_spark(
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one harness table (TESTDATA.md) as a DataFrame.
 
-    Parquet scan: Catalyst handles column pruning + predicate pushdown
-    into the scan (reference hand-builds its one pushdown as SQL text,
+    The schema comes from the file's own footer, read on the driver by
+    ``schema.parquet_schema`` — the schema Spark's inference would
+    return, without its one-task inference job (``read_parquet`` falls
+    back to inference where the footer cannot name it). Catalyst
+    handles column pruning + predicate pushdown into the scan
+    (reference hand-builds its one pushdown as SQL text,
     util.py:148-161 — here it is free for every query).
 
     ``events.ts`` has shipped in two physical spellings across harness
@@ -123,43 +129,33 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     RANGE frames) see ONE type:
 
     - parquet TIMESTAMP(NANOS): Spark's vectorized reader rejects it;
-      read as long nanos (``nanosAsLong``) and convert by exact
-      integer division (``DIV 1000`` — no double round-trip, which
-      would lose precision above 2^53 ns). The option is SCOPED to
-      this read (the schema is captured at analysis, so restoring
-      immediately is safe): left set session-wide it would silently
-      turn TIMESTAMP(NANOS) columns of any UNRELATED later parquet
-      read into bigint.
+      the footer schema is built with ``nanos_as_long`` (a copy of the
+      session conf, never the shared session), the read returns the raw
+      nanos as bigint, and exact integer division converts them
+      (``DIV 1000`` — no double round-trip, which would lose precision
+      above 2^53 ns).
     - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark 4 infers
       TIMESTAMP_NTZ, which ``unix_micros`` rejects; cast to TIMESTAMP
       (bit-identical wall-clock values — the session TZ is pinned UTC
       in get_spark, so the NTZ→TZ reinterpretation is the identity).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        from pyspark.sql import functions as F
+    if name != "events":
+        return read_parquet(spark, path)
+    from pyspark.sql import functions as F
 
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        try:
-            prev: str | None = spark.conf.get(key)
-        except Exception:
-            prev = None
-        spark.conf.set(key, "true")
-        try:
-            df = spark.read.parquet(path)
-            # force analysis inside the scoped window
-            ts_type = dict(df.dtypes).get("ts")
-            if ts_type == "bigint":
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-            elif ts_type == "timestamp_ntz":
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        return df
-    return spark.read.parquet(path)
+    schema = parquet_schema(spark, path, nanos_as_long=True)
+    df = (
+        spark.read.schema(schema).parquet(path)
+        if schema is not None
+        else read_parquet(spark, path)
+    )
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    elif ts_type == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:

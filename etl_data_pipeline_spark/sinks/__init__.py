@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
-from etl_data_pipeline_spark.schema import contains_map
+from etl_data_pipeline_spark.schema import contains_map, read_parquet
 
 
 class SinkFn(Protocol):
@@ -119,7 +119,7 @@ def _recover_interrupted_swap_safe(path: str) -> None:
 def read_parquet_if_exists(
     spark: SparkSession, path: str, lease_held: bool = False
 ) -> DataFrame | None:
-    """``spark.read.parquet(path)``, or None ONLY when the path
+    """``read_parquet(spark, path)``, or None ONLY when the path
     genuinely does not exist.
 
     Any other read failure (permissions, corrupt footer, transient FS
@@ -139,7 +139,7 @@ def read_parquet_if_exists(
     else:
         _recover_interrupted_swap_safe(path)
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         # force analysis now so a missing path surfaces here, not at
         # the first downstream action
         df.schema
@@ -158,7 +158,7 @@ def read_parquet_if_exists(
         with writer_lease(path):
             _recover_interrupted_swap(path)
             try:
-                df = spark.read.parquet(path)
+                df = read_parquet(spark, path)
                 df.schema
                 return df
             except AnalysisException as e2:
@@ -757,7 +757,7 @@ def compact_parquet(
                 if f.endswith(".parquet")
             )
         n_files = max(1, -(-total // target_file_bytes))  # ceil division
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         # PRESERVE a hive-partitioned layout: the read recovers
         # col=value dirs as data columns, but a flat rewrite would
         # destroy the directory structure — partition pruning (the

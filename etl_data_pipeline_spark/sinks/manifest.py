@@ -67,6 +67,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_data_pipeline_spark.schema import read_parquet
 from etl_data_pipeline_spark.sinks import writer_lease
 
 MANIFEST = "MANIFEST.json"
@@ -136,7 +137,7 @@ def _check_schema(
     if prev is None:
         # legacy manifest without a recorded schema: derive from data
         spark = df.sparkSession
-        prev = _schema_of(spark.read.parquet(os.path.join(table_dir, cur["dirs"][-1])))
+        prev = _schema_of(read_parquet(spark, os.path.join(table_dir, cur["dirs"][-1])))
         cur = {**cur, "schema": prev}
     return _check_schema_dict(cur, _schema_of(df), merge_schema, table_dir)
 
@@ -541,7 +542,7 @@ def _read_dirs(
             for d in dirs
         ]
     else:
-        frames = [spark.read.parquet(os.path.join(table_dir, d)) for d in dirs]
+        frames = [read_parquet(spark, os.path.join(table_dir, d)) for d in dirs]
     if len(frames) == 1:
         out = frames[0]
     else:

@@ -21,6 +21,8 @@ from typing import Protocol
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_data_pipeline_spark.schema import read_parquet
+
 
 class SourceFn(Protocol):
     def __call__(self, spark: SparkSession, table: str, options: dict) -> DataFrame: ...
@@ -28,7 +30,7 @@ class SourceFn(Protocol):
 
 def _parquet_source(spark: SparkSession, table: str, options: dict) -> DataFrame:
     path = options.get("path") or os.path.join(options["dir"], f"{table}.parquet")
-    return spark.read.options(**options.get("reader_options", {})).parquet(path)
+    return read_parquet(spark, path, options.get("reader_options"))
 
 
 def _csv_source(spark: SparkSession, table: str, options: dict) -> DataFrame:

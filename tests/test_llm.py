@@ -850,3 +850,24 @@ def test_char_entropy_orders_texts_sensibly(spark):
         out = {r.doc_id: r for r in text_char_entropy(spark, tmp).collect()}
     assert out[1].char_entropy == 0.0 and out[1].n_distinct_chars == 1
     assert 0 < out[2].char_entropy < out[3].char_entropy
+
+
+def test_lr_wmap_non_finite_weights_match_lit_form(spark):
+    """A diverged LR step's inf/-inf/nan weights must build the same
+    map<bigint,double> values as the per-entry F.lit form, not
+    unparsable ``infD``/``nanD`` SQL (the string casts only widen the
+    map's value nullability)."""
+    from etl_data_pipeline_spark.llm.features import _lr_wmap
+
+    w = {1: float("inf"), 2: float("-inf"), 3: float("nan"), 4: -0.125}
+    support = sorted(w)
+    lit = F.create_map(
+        *[c for j in support for c in (F.lit(j).cast("bigint"), F.lit(w[j]))]
+    )
+    df = spark.range(1).select(_lr_wmap(support, w).alias("a"), lit.alias("b"))
+    a, b = (f.dataType for f in df.schema.fields)
+    assert (a.keyType, a.valueType) == (b.keyType, b.valueType)
+    got, want = df.first()
+    assert {k: repr(v) for k, v in got.items()} == {
+        k: repr(v) for k, v in want.items()
+    }
